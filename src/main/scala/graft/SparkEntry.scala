@@ -980,7 +980,7 @@ object SparkEntry {
     // the SAME grid written as zarr V3 (zarr-python 3's default format):
     // one zarr.json per node, dims in dimension_names, c/-prefixed chunk
     // keys, codec chain [bytes le, zstd] with REAL entropy-coded frames
-    // from the pure-JVM zstd encoder — read back through the same
+    // from zstd-jni (via ZstdLite) — read back through the same
     // chunk-parallel scan (executor-side writes AND reads)
     "q68_zarr_v3_roundtrip" -> ((s, dir) => {
       val binned = Binning.binDataBy(obsDerived(s, dir), Binning.BinConfig(

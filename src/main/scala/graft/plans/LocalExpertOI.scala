@@ -57,8 +57,6 @@ final case class OIConfig(
                                // each tile runs one 300-step variational-only
                                // Adam pass (O(steps * batch * M^2); lazy,
                                // once per tile) before evaluating.
-    broadcastExperts: Boolean = true,
-    saltBuckets: Int = 0,
     configId: Int = 0)
 
 /** One observation row joined to its expert (training window member). */
@@ -107,18 +105,25 @@ final case class TileResult(
   * rows; observations are the 10^12-row side and are never shuffled until
   * the single groupByKey on expert key, whose cardinality = number of
   * experts x window size, i.e. the minimum possible shuffle for per-tile
-  * fitting). Dense polar tiles are handled by salting the join
-  * (saltBuckets) and, at the fit, by the minObs/maxIter caps.
+  * fitting). Dense polar tiles are bounded at the fit by the
+  * minObs/maxIter caps.
   */
 object LocalExpertOI {
 
   /** Resume primitive (reference `_remove_previously_run_locations`,
     * local_experts.py:474-497): drop experts whose (x, y, t) already
-    * appears in run_details — exactly a left-anti equi join.
+    * appears in run_details — exactly a left-anti equi join. The finished
+    * keys (expert-sized) are collected into a local relation, so the
+    * returned plan no longer reads run_details: a later append to that
+    * table cannot re-evaluate the filter against the new rows when a
+    * cached result downstream is rebuilt.
     */
-  def resumeFilter(experts: DataFrame, runDetails: DataFrame): DataFrame =
-    experts.join(runDetails.select("x", "y", "t").dropDuplicates(),
-      Seq("x", "y", "t"), "left_anti")
+  def resumeFilter(experts: DataFrame, runDetails: DataFrame): DataFrame = {
+    val keys = runDetails.select("x", "y", "t").dropDuplicates()
+    val done = experts.sparkSession.createDataFrame(
+      java.util.Arrays.asList(keys.collect(): _*), keys.schema)
+    experts.join(broadcast(done), Seq("x", "y", "t"), "left_anti")
+  }
 
   private def bijectors(cfg: OIConfig): Array[Bijector] = {
     val ls: Array[Bijector] = cfg.lengthscaleBounds match {
@@ -239,8 +244,7 @@ object LocalExpertOI {
     val trainJoined = SpatialJoin.radiusJoin(
       obs.select(col("x"), col("y"), col("t"), col(cfg.obsCol).as("z")), e,
       RadiusJoinConfig(radius = cfg.trainingRadius,
-        temporal = Some(TemporalWindow("t", "t", cfg.tWindowBelow, cfg.tWindowAbove)),
-        broadcastRight = cfg.broadcastExperts, saltBuckets = cfg.saltBuckets))
+        temporal = Some(TemporalWindow("t", "t", cfg.tWindowBelow, cfg.tWindowAbove))))
       .select(
         col("expert_x").as("ex"), col("expert_y").as("ey"), col("expert_t").as("et"),
         col("x"), col("y"), col("t"), col("z"),
@@ -249,8 +253,7 @@ object LocalExpertOI {
 
     val predJoined = SpatialJoin.radiusJoin(
       predGrid.select("x", "y"), e.select("x", "y", "t"),
-      RadiusJoinConfig(radius = cfg.inferenceRadius, inclusive = false,
-        broadcastRight = cfg.broadcastExperts, saltBuckets = cfg.saltBuckets))
+      RadiusJoinConfig(radius = cfg.inferenceRadius, inclusive = false))
       .select(
         col("expert_x").as("ex"), col("expert_y").as("ey"), col("expert_t").as("et"),
         col("x").as("px"), col("y").as("py"))

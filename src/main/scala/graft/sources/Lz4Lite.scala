@@ -1,110 +1,29 @@
 package graft.sources
 
-/** Pure-JVM LZ4 *block format* codec (the public spec at
-  * lz4/lz4/doc/lz4_Block_format.md) — the compression blosc1 frames carry
-  * by default in zarr v2 stores (numcodecs `Blosc(cname='lz4')`, the zarr
-  * default compressor the reference hits through `xr.open_zarr`,
-  * GPSat/dataloader.py:28-35).
-  *
-  * The compressor is a standard greedy hash-chain matcher: any valid LZ4
-  * stream is acceptable output; the decompressor accepts every
-  * spec-conforming stream (extended literal/match lengths, overlapping
-  * matches).
+import net.jpountz.lz4.{LZ4Exception, LZ4Factory}
+
+/** LZ4 *block format* codec over lz4-java (shipped with Spark) — the
+  * compression blosc1 frames carry by default in zarr v2 stores
+  * (numcodecs `Blosc(cname='lz4')`, the zarr default compressor the
+  * reference hits through `xr.open_zarr`, GPSat/dataloader.py:28-35).
+  * Decoding uses the bounds-checked decompressor: chunk bytes come from
+  * outside the program.
   */
 object Lz4Lite {
+
+  private val factory = LZ4Factory.fastestInstance()
 
   /** Decompress an LZ4 block of `srcLen` bytes at `srcOff` into exactly
     * `dstLen` bytes.
     */
   def decompress(src: Array[Byte], srcOff: Int, srcLen: Int, dstLen: Int): Array[Byte] = {
     val dst = new Array[Byte](dstLen)
-    var s = srcOff
-    val end = srcOff + srcLen
-    var d = 0
-    while (s < end) {
-      val token = src(s) & 0xff
-      s += 1
-      // literal run
-      var litLen = token >>> 4
-      if (litLen == 15) {
-        var b = 0
-        while ({ b = src(s) & 0xff; s += 1; litLen += b; b == 255 }) ()
-      }
-      require(d + litLen <= dstLen && s + litLen <= end,
-        s"lz4: literal run overflows (d=$d lit=$litLen dst=$dstLen)")
-      System.arraycopy(src, s, dst, d, litLen)
-      s += litLen; d += litLen
-      if (s < end) { // last sequence has no match part
-        val offset = (src(s) & 0xff) | ((src(s + 1) & 0xff) << 8)
-        s += 2
-        require(offset > 0 && offset <= d, s"lz4: bad match offset $offset at $d")
-        var mLen = token & 0x0f
-        if (mLen == 15) {
-          var b = 0
-          while ({ b = src(s) & 0xff; s += 1; mLen += b; b == 255 }) ()
-        }
-        mLen += 4
-        require(d + mLen <= dstLen, s"lz4: match overflows output")
-        var m = d - offset
-        var k = 0
-        while (k < mLen) { dst(d) = dst(m); d += 1; m += 1; k += 1 } // may overlap
-      }
-    }
-    require(d == dstLen, s"lz4: decompressed $d bytes, expected $dstLen")
+    val n = try factory.safeDecompressor().decompress(src, srcOff, srcLen, dst, 0, dstLen)
+    catch { case e: LZ4Exception => throw new IllegalArgumentException(s"lz4: ${e.getMessage}", e) }
+    require(n == dstLen, s"lz4: decompressed $n bytes, expected $dstLen")
     dst
   }
 
-  private def read4(a: Array[Byte], i: Int): Int =
-    (a(i) & 0xff) | ((a(i + 1) & 0xff) << 8) | ((a(i + 2) & 0xff) << 16) | ((a(i + 3) & 0xff) << 24)
-  private def hash(v: Int): Int = (v * -1640531535) >>> 18 // 14-bit table
-
-  /** Compress `src` as one LZ4 block (greedy matcher, 64 KB window). */
-  def compress(src: Array[Byte]): Array[Byte] = {
-    val n = src.length
-    val out = new java.io.ByteArrayOutputStream(n / 2 + 16)
-    def writeLen(extra: Int): Unit = {
-      var e = extra
-      while (e >= 255) { out.write(255); e -= 255 }
-      out.write(e)
-    }
-    def emit(litFrom: Int, litTo: Int, offset: Int, mLen: Int): Unit = {
-      val litLen = litTo - litFrom
-      val litTok = math.min(litLen, 15)
-      if (offset == 0) { // final literal-only sequence
-        out.write(litTok << 4)
-        if (litLen >= 15) writeLen(litLen - 15)
-        out.write(src, litFrom, litLen)
-      } else {
-        val mTok = math.min(mLen - 4, 15)
-        out.write((litTok << 4) | mTok)
-        if (litLen >= 15) writeLen(litLen - 15)
-        out.write(src, litFrom, litLen)
-        out.write(offset & 0xff); out.write((offset >>> 8) & 0xff)
-        if (mLen - 4 >= 15) writeLen(mLen - 4 - 15)
-      }
-    }
-    // spec margins: last match must end 5+ bytes before the end and cannot
-    // start within the last 12 bytes
-    if (n < 13) { emit(0, n, 0, 0); return out.toByteArray }
-    val table = new Array[Int](1 << 14)
-    java.util.Arrays.fill(table, -1)
-    var anchor = 0
-    var pos = 0
-    val mfLimit = n - 12
-    while (pos <= mfLimit) {
-      val h = hash(read4(src, pos))
-      val ref = table(h)
-      table(h) = pos
-      if (ref >= 0 && pos - ref <= 0xffff && read4(src, ref) == read4(src, pos)) {
-        var mLen = 4
-        val matchLimit = n - 5
-        while (pos + mLen < matchLimit && src(ref + mLen) == src(pos + mLen)) mLen += 1
-        emit(anchor, pos, pos - ref, mLen)
-        pos += mLen
-        anchor = pos
-      } else pos += 1
-    }
-    emit(anchor, n, 0, 0)
-    out.toByteArray
-  }
+  /** Compress `src` as one LZ4 block. */
+  def compress(src: Array[Byte]): Array[Byte] = factory.fastCompressor().compress(src)
 }

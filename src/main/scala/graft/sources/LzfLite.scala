@@ -1,105 +1,45 @@
 package graft.sources
 
-/** Pure-JVM LZF codec — h5py's OWN portable compression filter (HDF5
-  * filter id 32000, `compression='lzf'`), implemented from the public
-  * LibLZF/liblzf format: a stream of instructions where a control byte
-  * `< 32` copies `ctrl + 1` literal bytes, and otherwise encodes a
-  * back-reference of length `(ctrl >> 5) + 2` (value 7 extends with one
-  * extra length byte) at distance `(((ctrl & 31) << 8) | nextByte) + 1`.
-  * Matches copy byte-by-byte (overlap allowed). The ENCODER emits the
-  * same grammar greedily; [[BloscLite]]-style conformance rests on
-  * per-opcode byte vectors + roundtrip properties (no liblzf binary in
-  * this sandbox — documented).
+import com.ning.compress.lzf.impl.VanillaChunkEncoder
+import com.ning.compress.lzf.util.ChunkDecoderFactory
+
+/** LZF codec over compress-lzf (shipped with Spark) — h5py's OWN
+  * portable compression filter (HDF5 filter id 32000,
+  * `compression='lzf'`). h5py stores bare liblzf streams, without the
+  * "ZV" chunk headers of compress-lzf's container format, so this
+  * object calls the library's raw chunk decoder and encoder directly.
   */
 object LzfLite {
 
   /** Decompress into exactly `outLen` bytes. */
   def decompress(src: Array[Byte], off: Int, len: Int, outLen: Int, name: String): Array[Byte] = {
+    // the decoder reads up to the end of its input array, so bound it to the stream
+    val in = if (off == 0 && len == src.length) src else java.util.Arrays.copyOfRange(src, off, off + len)
     val out = new Array[Byte](outLen)
-    var ip = off
-    val ipLimit = off + len
-    var op = 0
-    while (ip < ipLimit) {
-      val ctrl = src(ip) & 0xff
-      ip += 1
-      if (ctrl < 32) { // literal run
-        val run = ctrl + 1
-        require(ip + run <= ipLimit, s"$name: lzf literal run past stream end")
-        require(op + run <= outLen, s"$name: lzf literals overrun output")
-        System.arraycopy(src, ip, out, op, run)
-        ip += run; op += run
-      } else {
-        var mlen = ctrl >> 5
-        if (mlen == 7) {
-          require(ip < ipLimit, s"$name: lzf length byte past stream end")
-          mlen += src(ip) & 0xff; ip += 1
-        }
-        mlen += 2
-        require(ip < ipLimit, s"$name: lzf distance byte past stream end")
-        val dist = (((ctrl & 31) << 8) | (src(ip) & 0xff)) + 1
-        ip += 1
-        var ref = op - dist
-        require(ref >= 0, s"$name: lzf match reaches $ref before output start")
-        require(op + mlen <= outLen, s"$name: lzf match overruns output")
-        var k = 0
-        while (k < mlen) { out(op) = out(ref); op += 1; ref += 1; k += 1 }
-      }
+    try ChunkDecoderFactory.safeInstance().decodeChunk(in, 0, out, 0, outLen)
+    catch {
+      case e @ (_: java.io.IOException | _: IndexOutOfBoundsException) =>
+        throw new IllegalArgumentException(s"$name: lzf stream does not decode to $outLen bytes", e)
     }
-    require(op == outLen, s"$name: lzf stream produced $op of $outLen bytes")
     out
   }
 
-  /** Greedy single-probe hash compressor emitting the grammar above;
-    * null when not smaller (HDF5's optional-filter convention stores the
-    * chunk raw in that case).
+  /** `tryCompress` is the library's bare-liblzf encoder; it is protected
+    * because the public API always wraps it in a chunk header.
+    */
+  private final class RawEncoder(n: Int) extends VanillaChunkEncoder(n) {
+    def encode(src: Array[Byte], out: Array[Byte]): Int = tryCompress(src, 0, src.length, out, 0)
+  }
+
+  /** Bare liblzf compression; null when not smaller (HDF5's
+    * optional-filter convention stores the chunk raw in that case).
     */
   def compress(src: Array[Byte]): Array[Byte] = {
     val n = src.length
-    if (n < 16) return null
-    val out = new java.io.ByteArrayOutputStream(n)
-    val hashLog = 13
-    val table = new Array[Int](1 << hashLog)
-    java.util.Arrays.fill(table, -1)
-    def hash(i: Int): Int = {
-      val v = (src(i) & 0xff) | ((src(i + 1) & 0xff) << 8) | ((src(i + 2) & 0xff) << 16)
-      (v * 2654435761L >>> (32 - hashLog)).toInt & ((1 << hashLog) - 1)
-    }
-    var litStart = 0
-    def flushLiterals(until: Int): Unit = {
-      var s = litStart
-      while (s < until) {
-        val run = math.min(32, until - s)
-        out.write(run - 1)
-        out.write(src, s, run)
-        s += run
-      }
-      litStart = until
-    }
-    var i = 0
-    while (i <= n - 5) {
-      val h = hash(i)
-      val cand = table(h)
-      table(h) = i
-      val dist = i - cand
-      if (cand >= 0 && dist <= 8192 &&
-        src(cand) == src(i) && src(cand + 1) == src(i + 1) && src(cand + 2) == src(i + 2)) {
-        var len = 3
-        val maxLen = math.min(n - i, 2 + 7 + 255) // one extension byte max
-        while (len < maxLen && src(cand + len) == src(i + len)) len += 1
-        flushLiterals(i)
-        val lbits = len - 2
-        if (lbits < 7) out.write((lbits << 5) | ((dist - 1) >> 8))
-        else { out.write((7 << 5) | ((dist - 1) >> 8)); out.write(lbits - 7) }
-        out.write((dist - 1) & 0xff)
-        var k = i + 1
-        val end = math.min(i + len, n - 3)
-        while (k < end) { table(hash(k)) = k; k += 1 }
-        i += len
-        litStart = i
-      } else i += 1
-    }
-    flushLiterals(n)
-    val res = out.toByteArray
-    if (res.length < n) res else null
+    if (n < 16) return null // too short to shrink; the encoder needs a few bytes of lookahead
+    // worst case: one control byte per 32 literals
+    val out = new Array[Byte](n + n / 32 + 16)
+    val used = new RawEncoder(n).encode(src, out)
+    if (used < n) java.util.Arrays.copyOf(out, used) else null
   }
 }

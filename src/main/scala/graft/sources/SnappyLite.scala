@@ -1,133 +1,30 @@
 package graft.sources
 
-/** Pure-JVM Snappy RAW-format codec (the block format, not the framed
-  * stream), implemented from the public Snappy format description:
-  * a varint uncompressed length, then tagged elements — literals
-  * (tag & 3 == 0, length in the tag or 1-4 trailing bytes) and copies
-  * with 1-, 2- or 4-byte little-endian offsets. This is the payload
-  * `Blosc(cname='snappy')` frames carry. Decoder conformance rests on
-  * per-opcode byte vectors + an encoder emitting the same grammar
-  * (no snappy binary in this sandbox — documented).
+import org.xerial.snappy.Snappy
+
+/** Snappy RAW-format codec (the block format, not the framed stream)
+  * over snappy-java (shipped with Spark): a varint uncompressed length,
+  * then tagged literal/copy elements. This is the payload
+  * `Blosc(cname='snappy')` frames carry.
   */
 object SnappyLite {
 
   /** Decompress one raw-snappy block; `outLen` must match the varint. */
-  def decompress(src: Array[Byte], off: Int, len: Int, outLen: Int, name: String): Array[Byte] = {
-    var ip = off
-    val ipLimit = off + len
-    // preamble: varint uncompressed length
-    var declared = 0L
-    var shift = 0
-    var more = true
-    while (more) {
-      require(ip < ipLimit, s"$name: snappy varint past stream end")
-      val b = src(ip) & 0xff; ip += 1
-      declared |= (b & 0x7fL) << shift
-      shift += 7
-      more = (b & 0x80) != 0
+  def decompress(src: Array[Byte], off: Int, len: Int, outLen: Int, name: String): Array[Byte] =
+    try {
+      val declared = Snappy.uncompressedLength(src, off, len)
+      require(declared == outLen, s"$name: snappy declares $declared bytes, expected $outLen")
+      val out = new Array[Byte](outLen)
+      Snappy.uncompress(src, off, len, out, 0)
+      out
+    } catch {
+      case e: java.io.IOException =>
+        throw new IllegalArgumentException(s"$name: snappy stream rejected: ${e.getMessage}", e)
     }
-    require(declared == outLen, s"$name: snappy declares $declared bytes, expected $outLen")
-    val out = new Array[Byte](outLen)
-    var op = 0
-    while (ip < ipLimit) {
-      val tag = src(ip) & 0xff
-      ip += 1
-      (tag & 3) match {
-        case 0 => // literal
-          var run = (tag >> 2) + 1
-          if (run > 60) {
-            val extra = run - 60 // 1..4 length bytes
-            var v = 0
-            (0 until extra).foreach(k => v |= (src(ip + k) & 0xff) << (8 * k))
-            ip += extra
-            run = v + 1
-          }
-          require(ip + run <= ipLimit, s"$name: snappy literal past stream end")
-          require(op + run <= outLen, s"$name: snappy literals overrun output")
-          System.arraycopy(src, ip, out, op, run)
-          ip += run; op += run
-        case kind =>
-          val (mlen, dist) = kind match {
-            case 1 => // copy, 1-byte offset: len 4..11, offset 11 bits
-              val l = ((tag >> 2) & 0x7) + 4
-              val d = ((tag >> 5) << 8) | (src(ip) & 0xff)
-              ip += 1
-              (l, d)
-            case 2 => // copy, 2-byte LE offset
-              val l = (tag >> 2) + 1
-              val d = (src(ip) & 0xff) | ((src(ip + 1) & 0xff) << 8)
-              ip += 2
-              (l, d)
-            case _ => // copy, 4-byte LE offset
-              val l = (tag >> 2) + 1
-              val d = (src(ip) & 0xff) | ((src(ip + 1) & 0xff) << 8) |
-                ((src(ip + 2) & 0xff) << 16) | ((src(ip + 3) & 0xff) << 24)
-              ip += 4
-              (l, d)
-          }
-          require(dist > 0 && op - dist >= 0, s"$name: snappy copy distance $dist at $op")
-          require(op + mlen <= outLen, s"$name: snappy copy overruns output")
-          var ref = op - dist
-          var k = 0
-          while (k < mlen) { out(op) = out(ref); op += 1; ref += 1; k += 1 }
-      }
-    }
-    require(op == outLen, s"$name: snappy stream produced $op of $outLen bytes")
-    out
-  }
 
-  /** Greedy raw-snappy compressor (varint + literal/copy2 elements);
-    * null when not smaller.
-    */
+  /** Raw-snappy compression; null when not smaller. */
   def compress(src: Array[Byte]): Array[Byte] = {
-    val n = src.length
-    if (n < 16) return null
-    val out = new java.io.ByteArrayOutputStream(n)
-    // varint length
-    var v = n
-    while ((v & ~0x7f) != 0) { out.write((v & 0x7f) | 0x80); v >>>= 7 }
-    out.write(v)
-    val hashLog = 13
-    val table = new Array[Int](1 << hashLog)
-    java.util.Arrays.fill(table, -1)
-    def hash(i: Int): Int = {
-      val w = (src(i) & 0xff) | ((src(i + 1) & 0xff) << 8) |
-        ((src(i + 2) & 0xff) << 16) | ((src(i + 3) & 0xff) << 24)
-      (w * 0x1e35a7bd >>> (32 - hashLog)) & ((1 << hashLog) - 1)
-    }
-    def emitLiterals(from: Int, until: Int): Unit = {
-      var s = from
-      while (s < until) {
-        val run = math.min(60, until - s) // tag-encoded literal lengths only
-        out.write((run - 1) << 2)
-        out.write(src, s, run)
-        s += run
-      }
-    }
-    var litStart = 0
-    var i = 0
-    while (i <= n - 8) {
-      val h = hash(i)
-      val cand = table(h)
-      table(h) = i
-      val dist = i - cand
-      if (cand >= 0 && dist <= 0xffff &&
-        src(cand) == src(i) && src(cand + 1) == src(i + 1) &&
-        src(cand + 2) == src(i + 2) && src(cand + 3) == src(i + 3)) {
-        var len = 4
-        while (i + len < n && len < 64 && src(cand + len) == src(i + len)) len += 1
-        emitLiterals(litStart, i)
-        out.write(((len - 1) << 2) | 2) // copy2
-        out.write(dist & 0xff); out.write((dist >> 8) & 0xff)
-        var k = i + 1
-        val end = math.min(i + len, n - 4)
-        while (k < end) { table(hash(k)) = k; k += 1 }
-        i += len
-        litStart = i
-      } else i += 1
-    }
-    emitLiterals(litStart, n)
-    val res = out.toByteArray
-    if (res.length < n) res else null
+    val res = Snappy.compress(src)
+    if (res.length < src.length) res else null
   }
 }

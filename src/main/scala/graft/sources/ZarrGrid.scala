@@ -1507,10 +1507,9 @@ object ZarrGrid extends Serializable {
   }
 
   /** Re-encode one array's chunk files as bare zstd frames and declare
-    * the numcodecs `Zstd()` compressor — real entropy-coded frames via
-    * [[ZstdLite.compress]] (LZ77 + predefined-FSE sequences; conformance
-    * in ZstdSpec decodes them with the real zstd CLI). Keeps
-    * `.zmetadata` in sync like [[toBlosc]].
+    * the numcodecs `Zstd()` compressor — frames from [[ZstdLite.compress]]
+    * (zstd-jni at its default level). Keeps `.zmetadata` in sync like
+    * [[toBlosc]].
     */
   def toZstd(spark: SparkSession, arrDir: String): Unit = {
     val meta = parseZarray(new String(readSmall(spark, s"$arrDir/.zarray"), "UTF-8"), arrDir)
@@ -1653,7 +1652,7 @@ object ZarrGrid extends Serializable {
   /** Encode one chunk under the named compressor: "zlib" (this writer's
     * historical default), "blosc" (the zarr ecosystem default — shuffled
     * blosc1-lz4 frames via BloscLite), or "zstd" (numcodecs `Zstd()` —
-    * bare RFC 8878 frames via the pure-JVM entropy encoder). Under zarr
+    * bare RFC 8878 frames via zstd-jni). Under zarr
     * v3 the zlib knob maps to the spec's `gzip` codec (a full RFC-1952
     * stream, not a bare RFC-1950 one); blosc/zstd frames are identical
     * across formats.

@@ -61,6 +61,35 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(store.table("run_details").count() === 25, "no duplicate rows appended")
   }
 
+  test("partial resume: refit experts get their preds and hyperparameter rows") {
+    val small = cfg.copy(nDocs = 8000)
+    val ref = new ResultStore(spark, tmpDir())
+    GpSatPipeline.runAll(spark, ref, small, smooth = false)
+    // a crash after some experts were written: cut every fourth expert
+    // that produced predictions out of all five fit tables
+    val cut = ref.table("preds").select("x", "y").distinct().orderBy("x", "y").collect()
+      .zipWithIndex.collect { case (r, i) if i % 4 == 0 => (r.getDouble(0), r.getDouble(1)) }
+    assert(cut.nonEmpty)
+    val cutDf = spark.createDataFrame(cut.toSeq).toDF("x", "y")
+    val fitTables = Seq("run_details", "preds", "lengthscales", "kernel_variance", "likelihood_variance")
+    val store = new ResultStore(spark, tmpDir())
+    fitTables.foreach(t => store.overwrite(t, ref.table(t).join(broadcast(cutDf), Seq("x", "y"), "left_anti")))
+
+    val resumed = GpSatPipeline.runAll(spark, store, small, smooth = false)
+    assert(resumed.tiles === cut.length, "only the cut experts are refit")
+    fitTables.foreach { t =>
+      val have = store.table(t).select("x", "y").distinct().collect()
+        .map(r => (r.getDouble(0), r.getDouble(1))).toSet
+      cut.foreach(e => assert(have.contains(e), s"$t has no rows for refit expert $e"))
+    }
+    assert(store.table("run_details").count() === ref.table("run_details").count())
+    // tile fits are deterministic, so the resumed tables equal the uninterrupted run's
+    fitTables.tail.foreach { t =>
+      def rows(s: ResultStore) = s.table(t).collect().map(_.toSeq.mkString(",")).sorted.toSeq
+      assert(rows(store) === rows(ref), t)
+    }
+  }
+
   test("config identity: same canonical config reuses its id, changed config increments") {
     val store = new ResultStore(spark, tmpDir())
     val id0 = store.configId("""{"a":1}""")

@@ -7,7 +7,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Paths}
 import java.util.Base64
 
-/** Conformance vectors for the pure-JVM zstd decoder: every base64 frame
+/** Conformance vectors for the zstd decoder: every base64 frame
   * below was produced by the REAL zstd CLI v1.5.7 (levels 3-19) over
   * deterministic inputs the spec reconstructs byte-for-byte in Scala —
   * covering raw/RLE/compressed blocks, 1- and 4-stream Huffman literals,
@@ -90,6 +90,13 @@ class ZstdSpec extends AnyFunSuite with SparkTestBase {
     val e = intercept[IllegalArgumentException](
       ZstdLite.decompress("not a zstd frame at all".getBytes, "junk"))
     assert(e.getMessage.contains("magic"))
+  }
+
+  test("content checksum is verified: a flipped payload byte raises") {
+    val frame = b64(fixtures.head._3) // the CLI frame carries a content checksum
+    frame(9) = (frame(9) ^ 0x01).toByte  // first byte of the raw block's payload
+    val e = intercept[IllegalArgumentException](ZstdLite.decompress(frame, "flipped"))
+    assert(e.getMessage.contains("flipped") && e.getMessage.contains("checksum"))
   }
 
   test("stored-mode encoder roundtrips, including multi-block > 128KB") {
